@@ -155,10 +155,8 @@ def main() -> None:
     # round-16 registrations (the registry_r16 bank, live since the
     # r16 rotation, plus mid-round direct additions): same treatment.
     out["r16"], out["r16_plans"] = _r16_timings(spark, sf_dir)
-    # r17 staging bank: same single-warmed-run + fingerprint treatment,
-    # so nothing registers untimed at the next rotation (the staging
-    # contract's own lesson — the 22.7 s rolling-distinct catch).
-    out["staged"], out["staged_plans"] = _staged_timings(spark, sf_dir)
+    # round-17 registrations (the registry_r17 module): same treatment.
+    out["r17"], out["r17_plans"] = _r17_timings(spark, sf_dir)
     # sf1 scaling evidence (VERDICT r07 #5), gated on
     # SPARK_GRAFT_SF1_DIR so routine per-round runs stay cheap: a
     # single warmed run of every headline query at the synthetic
@@ -376,20 +374,14 @@ def _r16_timings(
                              skip=set(HEADLINE))
 
 
-def _staged_timings(
+def _r17_timings(
         spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Wall time + plan fingerprint for every round-17 BANK entry,
-    driven off registry_r17's own registrations. Importing the bank
-    module registers its entries IN THIS PROCESS ONLY — they append
-    past the already-rotated stable block and the module's tail guard
-    re-rotates (registry_r17.py bottom — real since ADVICE r15 #1;
-    rotation is idempotent), so the certified window SET bench
-    measures is untouched (the driver's correctness process never
-    imports the bank; tests/test_registry_r17_staged.py proves
-    non-import on the canonical path)."""
-    from yougile_etl_pipeline_spark import registry_r17
+    """Per-round perf/plan record for the round-17 registrations (the
+    registry_r17 module)."""
+    from yougile_etl_pipeline_spark.registry_r17 import R17_ENTRIES
 
-    return _manifest_timings(spark, sf_dir, registry_r17.R17_ENTRIES)
+    return _manifest_timings(spark, sf_dir, R17_ENTRIES,
+                             skip=set(HEADLINE))
 
 
 def _sf1_block(spark, sf1_dir: str,

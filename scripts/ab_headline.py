@@ -29,10 +29,6 @@ def main() -> None:
     from yougile_etl_pipeline_spark.registry import QUERIES
     from yougile_etl_pipeline_spark.session import get_spark
 
-    if any(n not in QUERIES for n in names):
-        # staged r17 bank entries register on module import only
-        from yougile_etl_pipeline_spark import registry_r17  # noqa: F401
-
     spark = get_spark(app_name="ab-headline")
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["a2_counts"](spark, sf_dir).write.format("noop") \

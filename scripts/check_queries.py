@@ -1,7 +1,10 @@
 """Ad-hoc oracle check for a subset of registered queries (dev tool).
 
-Usage: python scripts/check_queries.py [query ...]   (default: the
-current 50-query certification window)
+Usage: python scripts/check_queries.py query [query ...]
+
+Checks the named queries against their DuckDB oracles at
+SPARK_GRAFT_SF_DIR (default sf0.01). To check every registered query,
+use scripts/full_sweep.py.
 """
 from __future__ import annotations
 
@@ -17,14 +20,12 @@ from tests.oracle_compare import compare, duck_connect  # noqa: E402
 from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES  # noqa: E402
 from yougile_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-# Default set = the driver's CURRENT 50-query certification window
-# (the first 50 registered queries after rotation) — exactly what the
-# next CORRECTNESS_r{N}.json will grade.
-DEFAULT = list(QUERIES)[:50]
-
 
 def main() -> None:
-    names = sys.argv[1:] or DEFAULT
+    names = sys.argv[1:]
+    if not names:
+        print(__doc__.strip(), file=sys.stderr)
+        sys.exit(2)
     spark = get_spark(app_name="check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(SF)

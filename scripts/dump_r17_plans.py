@@ -78,7 +78,6 @@ def _drain_caches(spark) -> None:
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    from yougile_etl_pipeline_spark import registry_r17  # noqa: F401
     from yougile_etl_pipeline_spark.operators.diagnostics import (
         formatted_plan,
         plan_profile,

@@ -1,14 +1,9 @@
 """Full-registry oracle sweep → one committed JSON artifact.
 
-VERDICT r13 #5: the certification window rotates (50 entries/round),
-so official driver coverage of the whole registry takes ~8 rounds to
-cycle; the builder's per-round "full sweep green" claim in ROUNDLOG
-was self-reported. This script makes it auditable: every registered
-query runs against its DuckDB oracle at the driver's correctness
-scale (sf0.01 unless SPARK_GRAFT_SF_DIR overrides) and the per-query
-result (ok / issues, wall seconds, spark row count) lands in
-SWEEP_r{N}.json at the repo root, where the judge can diff it against
-CORRECTNESS_r{N}.json.
+Every registered query runs against its DuckDB oracle at sf0.01
+(unless SPARK_GRAFT_SF_DIR overrides) and the per-query result (ok /
+issues, wall seconds, spark row count) lands in SWEEP_r{N}.json at
+the repo root.
 
 Usage: python scripts/full_sweep.py <round>   (e.g. 14 → SWEEP_r14.json)
 """

@@ -23,9 +23,6 @@ def main() -> None:
     from yougile_etl_pipeline_spark.session import get_spark
 
     names = sys.argv[1:]
-    if any(n not in QUERIES for n in names):
-        # staged r17 bank entries register on import (bench does the same)
-        from yougile_etl_pipeline_spark import registry_r17  # noqa: F401
     spark = get_spark(app_name="profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \

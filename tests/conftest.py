@@ -4,25 +4,9 @@ import tempfile
 
 import pytest
 
-# Initialize the registry through its OWN import (conftest is imported
-# before every test module): a test module whose first engine import is
-# registry_ext (for an oracle-SQL helper) would otherwise enter the
-# registry via the circular tail-import path, running the certification
-# -window rotation BEFORE registry_ext's registrations execute — the
-# window order would silently depend on pytest collection order
-# (caught by test_certification_window failing under the full suite
-# while passing alone).
-import yougile_etl_pipeline_spark.registry  # noqa: F401  (order-load-bearing)
 from yougile_etl_pipeline_spark.session import get_spark
 
-# Overridable so the staged-oracle parity tests can be re-run at the
-# driver's certification SF before registration:
-#   SPARK_GRAFT_SMOKE_DIR=/root/testdata/sf0.01 \
-#     python scripts/check_staged.py
-import os as _os  # noqa: E402
-
-SF_SMOKE = _os.environ.get("SPARK_GRAFT_SMOKE_DIR",
-                           "/root/testdata/sf0.001")
+SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 

@@ -1,93 +1,22 @@
-"""Regression tests for the four ADVICE-r15 findings.
+"""Regression tests for the ADVICE-r15 findings that still apply.
 
-1. The 'module tail guard re-rotates' comments were fictitious for
-   registry_r15/r16 — both modules (and the seeded registry_r17) now
-   carry the real registry_r14-style guard, so window composition is
-   import-order independent by MECHANISM, not by incidental import
-   order.
-2. In-process bank imports polluting the global QUERIES for the rest
-   of the pytest session: registry_r16 is wired now (imports are
-   no-ops); the r17 staged test runs its smoke in a subprocess, and
-   the direct-import pollution scenario is exercised here in a
-   subprocess too.
-3. The positional 2-slot FIFO persist caches (registry_r15._SWEEP_CACHE,
+1. The positional 2-slot FIFO persist caches (registry_r15._SWEEP_CACHE,
    registry_r16._R16_CACHE) are now plan-keyed sameSemantics LRUs
    (operators/caching.py::PlanKeyedLRU — the text.py gram-cache
    pattern): an entry that persists two relations can no longer be
    silently unpersisted by the next entry's single persist.
-4. minhash_decontam's broadcast of the benchmark band-bucket relation
+2. minhash_decontam's broadcast of the benchmark band-bucket relation
    gained an optional max_bench_docs guard that raises a clear
    ValueError instead of OOMing on a corpus-sized bench side.
 """
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
-
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 # ---------------------------------------------------------------------------
-# 1 + 2: tail guards are real; direct bank-module entry converges
-# ---------------------------------------------------------------------------
-
-def test_bank_modules_carry_real_tail_guards():
-    for mod in ("registry_r15", "registry_r16", "registry_r17"):
-        src = open(os.path.join(
-            REPO, "yougile_etl_pipeline_spark", f"{mod}.py")).read()
-        assert "_rotate_certification_window()" in src, (
-            f"{mod} lost its tail rotation guard (ADVICE r15 #1: the "
-            f"guard the comments describe must actually exist)")
-
-
-def test_direct_r16_import_yields_canonical_window():
-    """Entering the engine through the WIRED bank module directly must
-    converge to the same accounted window as the canonical
-    registry-first import (the tail guard doing its job)."""
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "import yougile_etl_pipeline_spark.registry_r16\n"
-        "from yougile_etl_pipeline_spark.registry import (QUERIES,\n"
-        "    _STABLE_CERTIFIED, _DEFERRED_TO_NEXT_WINDOW)\n"
-        "acc = set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)\n"
-        "assert not [q for q in list(QUERIES)[50:] if q not in acc]\n"
-        "assert not [q for q in list(QUERIES)[:50] if q in acc]\n"
-        "print('R16-ENTRY-OK', len(QUERIES))\n" % REPO)
-    out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
-                         capture_output=True, text=True, timeout=300)
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "R16-ENTRY-OK" in out.stdout
-
-
-def test_staged_r17_import_keeps_window_accounting():
-    """Importing the STAGED r17 bank in-process must leave the
-    certification-window accounting test's invariant intact: staged
-    entries append past the stable block AND the tail guard re-rotates
-    — either way every out-of-window query stays accounted. Run in a
-    subprocess so this session's registry stays untouched (ADVICE r15
-    #2)."""
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "import yougile_etl_pipeline_spark.registry\n"
-        "import yougile_etl_pipeline_spark.registry_r17 as r17\n"
-        "from yougile_etl_pipeline_spark.registry import (QUERIES,\n"
-        "    _STABLE_CERTIFIED, _DEFERRED_TO_NEXT_WINDOW)\n"
-        "acc = (set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)\n"
-        "       | set(r17.R17_ENTRIES))\n"
-        "assert not [q for q in list(QUERIES)[50:] if q not in acc]\n"
-        "print('R17-POLLUTION-OK')\n" % REPO)
-    out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
-                         capture_output=True, text=True, timeout=300)
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "R17-POLLUTION-OK" in out.stdout
-
-
-# ---------------------------------------------------------------------------
-# 3: plan-keyed LRU semantics
+# 1: plan-keyed LRU semantics
 # ---------------------------------------------------------------------------
 
 def test_plan_keyed_lru_hit_returns_cached_instance(spark):
@@ -151,7 +80,7 @@ def test_registry_caches_are_plan_keyed():
 
 
 # ---------------------------------------------------------------------------
-# 4: minhash_decontam bench-size guard
+# 2: minhash_decontam bench-size guard
 # ---------------------------------------------------------------------------
 
 def test_minhash_decontam_bench_cap_raises_clearly(spark):

@@ -1,39 +1,18 @@
-"""Pareto coverage at top-k ranks (r07 bank `mart_pareto_coverage`)
-— proven through the registry copy directly (the engine side is a
-composition of abc_analysis + one broadcast total)."""
+"""Pareto coverage at top-k ranks (`mart_pareto_coverage`) — proven
+through the registry copy directly (the engine side is a composition
+of abc_analysis + one broadcast total)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_SMOKE
 from tests.oracle_compare import compare, duck_connect
+from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
 
 
 def test_pareto_coverage_duckdb_parity(spark):
-    import subprocess
-    import sys
-
-    # registry_r07 must not be imported into this session (round-6
-    # window guard); prove the entry in a subprocess like the staged
-    # smoke does, at the fixture scale the caller selected.
-    import os
-    repo = __file__.rsplit("/tests/", 1)[0]
-    sf = os.environ.get("SPARK_GRAFT_SMOKE_DIR", SF_SMOKE)
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from yougile_etl_pipeline_spark.registry import QUERIES, ORACLES\n"
-        "import yougile_etl_pipeline_spark.registry_r07  # noqa\n"
-        "from yougile_etl_pipeline_spark.session import get_spark\n"
-        "from tests.oracle_compare import compare, duck_connect\n"
-        "spark = get_spark(app_name='pareto', master='local[4]')\n"
-        "spark.sparkContext.setLogLevel('ERROR')\n"
-        "con = duck_connect(%r)\n"
-        "issues = compare(QUERIES['mart_pareto_coverage'](spark, %r),\n"
-        "                 con, ORACLES['mart_pareto_coverage'])\n"
-        "assert not issues, issues\n"
-        "n = QUERIES['mart_pareto_coverage'](spark, %r).count()\n"
-        "assert n in (2, 3), n  # k=1000 cut needs >=1000 parts (sf0.01+)\n"
-        "print('PARETO-OK')\n" % (repo, sf, sf, sf))
-    out = subprocess.run([sys.executable, "-c", code], cwd=repo,
-                         capture_output=True, text=True, timeout=600)
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "PARETO-OK" in out.stdout
+    con = duck_connect(SF_SMOKE)
+    df = QUERIES["mart_pareto_coverage"](spark, SF_SMOKE)
+    issues = compare(df, con, ORACLES["mart_pareto_coverage"])
+    con.close()
+    assert not issues, issues
+    assert df.count() in (2, 3)  # k=1000 cut needs >=1000 parts (sf0.01+)

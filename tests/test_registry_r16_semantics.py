@@ -1,22 +1,11 @@
-"""Semantics unit tests for r16-bank entries whose correctness has a
+"""Semantics unit tests for registry_r16 entries whose correctness has a
 crisp hand-checkable core beyond the DuckDB parity smoke: the rule
 attribution's sole-kill logic, the session-sweep's exact session
 identity, and the boundary-chain direction."""
 
 from __future__ import annotations
 
-
-def _register(spark):
-    # registry_r16 is WIRED since the r16 rotation (registry_ext.py
-    # bottom), so this import is a no-op on the canonical path — kept
-    # so the file also works standalone before conftest touches the
-    # registry. While the bank was staged this in-process import
-    # appended 18 entries to the global QUERIES for the rest of the
-    # pytest session (ADVICE r15 #2) — r17-bank tests must use a
-    # subprocess or snapshot/restore instead.
-    import yougile_etl_pipeline_spark.registry_r16  # noqa: F401
-    from yougile_etl_pipeline_spark.registry import QUERIES
-    return QUERIES
+from yougile_etl_pipeline_spark.registry import QUERIES
 
 
 def test_rule_attribution_sole_kills(spark, tmp_path):
@@ -37,7 +26,6 @@ def test_rule_attribution_sole_kills(spark, tmp_path):
     docs.createOrReplaceTempView("__docs_r16")
     out = tmp_path / "docs.parquet"
     docs.coalesce(1).write.parquet(str(out.parent / "documents.parquet"))
-    QUERIES = _register(spark)
     rows = {r["rule"]: (r["n_flagged"], r["n_sole"])
             for r in QUERIES["quality_rule_attribution"](
                 spark, str(tmp_path)).collect()}
@@ -71,7 +59,6 @@ def test_session_gap_sweep_exact_identity(spark, tmp_path):
     spark.conf.set("spark.sql.parquet.outputTimestampType",
                    "TIMESTAMP_MICROS")
     ev.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
-    QUERIES = _register(spark)
     out = {r["gap_minutes"]: r["n_sessions"]
            for r in QUERIES["events_session_gap_sweep"](
                spark, str(tmp_path)).collect()}
@@ -89,7 +76,6 @@ def test_boundary_chain_direction(spark, tmp_path):
          (2, "z z z z z z z z")],
         "doc_id long, text string")
     docs.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    QUERIES = _register(spark)
     rows = {(r["prev_doc"], r["next_doc"])
             for r in QUERIES["dedup_boundary_chain"](
                 spark, str(tmp_path)).collect()}

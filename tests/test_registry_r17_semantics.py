@@ -1,29 +1,12 @@
-"""Semantics unit tests for r17-bank entries whose correctness has a
+"""Semantics unit tests for registry_r17 entries whose correctness has a
 crisp hand-checkable core beyond the DuckDB parity smoke: the
 capstone's budget identity and funnel monotonicity, the shard-skew
-conservation identity, and the prefix-family construction.
-
-Registration hygiene (ADVICE r15 #2): importing a STAGED bank
-in-process appends its entries to the global QUERIES for the rest of
-the pytest session, which breaks the certification-window accounting
-test under reordered collection. This file therefore registers the
-bank at import, captures LOCAL handles to the r17 callables, and
-immediately detaches the entries from the global registry — the
-tests run the real registry copies with zero global side effects."""
+conservation identity, and the prefix-family construction."""
 
 from __future__ import annotations
 
-from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-
-import yougile_etl_pipeline_spark.registry_r17 as _r17
-
-R17_Q = {n: QUERIES[n] for n in _r17.R17_ENTRIES}
-for _n in _r17.R17_ENTRIES:
-    QUERIES.pop(_n, None)
-    ORACLES.pop(_n, None)
-del _n
-
-from tests.conftest import SF_SMOKE  # noqa: E402
+from tests.conftest import SF_SMOKE
+from yougile_etl_pipeline_spark.registry import QUERIES
 
 
 def test_capstone_quota_identity_and_packing_bound(spark):
@@ -31,7 +14,7 @@ def test_capstone_quota_identity_and_packing_bound(spark):
     tokens (integer div), and no language may select more tokens than
     its quota — the two invariants ratio-rounding + naive packing
     lack."""
-    rows = R17_Q["train_corpus_build"](spark, SF_SMOKE).collect()
+    rows = QUERIES["train_corpus_build"](spark, SF_SMOKE).collect()
     assert rows, "capstone returned no rows"
     per_lang = {}
     for r in rows:
@@ -51,7 +34,7 @@ def test_funnel_stages_are_monotone_and_consistent(spark):
     """Doc and token counts can only shrink through the funnel, and
     the gated stage must reconcile with the capstone's accounting."""
     funnel = {r["stage"]: (r["n_docs"], r["n_tokens"])
-              for r in R17_Q["train_build_funnel"](
+              for r in QUERIES["train_build_funnel"](
                   spark, SF_SMOKE).collect()}
     order = ["1_raw", "2_canonical", "3_decontaminated",
              "4_quality_gated", "5_selected"]
@@ -59,7 +42,7 @@ def test_funnel_stages_are_monotone_and_consistent(spark):
     for a, b in zip(order, order[1:]):
         assert funnel[a][0] >= funnel[b][0], (a, b, funnel)
         assert funnel[a][1] >= funnel[b][1], (a, b, funnel)
-    cap = R17_Q["train_corpus_build"](spark, SF_SMOKE).collect()
+    cap = QUERIES["train_corpus_build"](spark, SF_SMOKE).collect()
     assert funnel["4_quality_gated"] == (
         sum(r["n_docs_gated"] for r in cap),
         sum(r["tokens_gated"] for r in cap))
@@ -76,7 +59,7 @@ def test_shard_skew_conservation(spark):
     from yougile_etl_pipeline_spark.operators.text import tokens
     from yougile_etl_pipeline_spark.sources.tables import load_table
 
-    rows = R17_Q["corpus_shard_skew"](spark, SF_SMOKE).collect()
+    rows = QUERIES["corpus_shard_skew"](spark, SF_SMOKE).collect()
     total = (load_table(spark, SF_SMOKE, "documents")
              .agg(F.sum(F.size(tokens("text"))).alias("t"))
              .collect()[0]["t"])
@@ -99,7 +82,7 @@ def test_prefix_families_hand_case(spark, tmp_path):
     docs.coalesce(1).write.parquet(
         str(tmp_path / "documents.parquet"))
     rows = {r["family_size"]: r for r in
-            R17_Q["dedup_prefix_families"](
+            QUERIES["dedup_prefix_families"](
                 spark, str(tmp_path)).collect()}
     assert list(rows) == [2]
     fam = rows[2]
@@ -114,12 +97,12 @@ def test_quota_sensitivity_exact_sums_and_capstone_agreement(spark):
     asserted: largest-remainder admits the Alabama paradox), selection
     must respect every quota, and the 50% arm must reproduce the
     capstone's lang_quota exactly."""
-    cap = R17_Q["train_corpus_build"](spark, SF_SMOKE).collect()
+    cap = QUERIES["train_corpus_build"](spark, SF_SMOKE).collect()
     total_gated = sum(r["tokens_gated"] for r in cap)
     cap_quota = {}
     for r in cap:
         cap_quota[r["lang"]] = r["lang_quota"]
-    rows = R17_Q["train_quota_sensitivity"](spark, SF_SMOKE).collect()
+    rows = QUERIES["train_quota_sensitivity"](spark, SF_SMOKE).collect()
     by_pct: dict = {}
     for r in rows:
         by_pct.setdefault(r["budget_pct"], []).append(r)
@@ -143,7 +126,7 @@ def test_centroid_purity_hand_case(spark, tmp_path):
         rows_in, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
     out = {r["label"]: r for r in
-           R17_Q["emb_label_centroid_purity"](
+           QUERIES["emb_label_centroid_purity"](
                spark, str(tmp_path)).collect()}
     # label-0 centroid ≈ (0.633, 0.367); vec 2 is nearer the label-1
     # centroid (0, 0.9) → 2 of 3 own-label; label 1 keeps its 1 vector
@@ -152,8 +135,3 @@ def test_centroid_purity_hand_case(spark, tmp_path):
     assert (out[1]["n_vecs"], out[1]["n_own"]) == (1, 1)
     assert out[1]["purity_ppm"] == 1_000_000
 
-
-def test_registry_globals_untouched_by_this_file():
-    missing = [n for n in _r17.R17_ENTRIES if n in QUERIES or n in ORACLES]
-    assert not missing, (
-        f"r17 entries leaked into the global registry: {missing}")

@@ -155,8 +155,6 @@ def test_token_apportionment_sums_exactly_to_budget(spark):
     """Largest-remainder quotas must sum EXACTLY to the 1M budget —
     the property plain ratio-rounding lacks — and every language's
     quota differs from its exact share by less than one unit."""
-    import yougile_etl_pipeline_spark.registry_r16  # noqa: F401 —
-    # wired since the r16 rotation, so a no-op on the canonical path
     from yougile_etl_pipeline_spark.registry import QUERIES
     from tests.conftest import SF_SMOKE
 

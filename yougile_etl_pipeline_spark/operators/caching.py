@@ -21,6 +21,12 @@ query construction is assumed, as everywhere in this engine: the
 registry builds plans sequentially; the cache is not guarded against
 concurrent construction.
 
+The cache is process-global, so every slot remembers the Spark
+application it was persisted under. Only a slot from the incoming
+frame's application can hit; slots left by a stopped application are
+dropped without ``unpersist`` (their blocks died with it), so a new
+session never receives a DataFrame bound to a dead one.
+
 At cluster scale the same reuse is a staging table or shuffle reuse;
 the local-mode persist (MEMORY_AND_DISK default) is the single-JVM
 equivalent.
@@ -33,13 +39,17 @@ from pyspark.sql import DataFrame
 __all__ = ["PlanKeyedLRU"]
 
 
+def _app_id(df: DataFrame) -> str:
+    return df.sparkSession.sparkContext.applicationId
+
+
 class PlanKeyedLRU:
     """A small LRU of persisted DataFrames keyed by plan semantics."""
 
     def __init__(self, slots: int = 3) -> None:
         assert slots >= 1
         self._slots = slots
-        self._cache: list[DataFrame] = []
+        self._cache: list[tuple[str, DataFrame]] = []
 
     def persist(self, df: DataFrame) -> DataFrame:
         """Return a persisted DataFrame semantically equal to ``df``.
@@ -47,16 +57,18 @@ class PlanKeyedLRU:
         On a ``sameSemantics`` hit the cached (already-persisted)
         DataFrame is returned and refreshed to most-recently-used; on
         a miss ``df`` is persisted, cached, and the oldest entry beyond
-        the slot bound is unpersisted (non-blocking)."""
-        for cached in self._cache:
+        the slot bound is unpersisted (non-blocking). Slots from
+        another Spark application are dropped first."""
+        app = _app_id(df)
+        self._cache = [slot for slot in self._cache if slot[0] == app]
+        for i, (_, cached) in enumerate(self._cache):
             if cached.sameSemantics(df):
-                self._cache.remove(cached)
-                self._cache.append(cached)  # refresh LRU position
+                self._cache.append(self._cache.pop(i))  # refresh LRU position
                 return cached
         df = df.persist()
-        self._cache.append(df)
+        self._cache.append((app, df))
         while len(self._cache) > self._slots:
-            self._cache.pop(0).unpersist(blocking=False)
+            self._cache.pop(0)[1].unpersist(blocking=False)
         return df
 
     def __len__(self) -> int:
@@ -66,10 +78,11 @@ class PlanKeyedLRU:
         # oldest → newest, same as the list-based slots this class
         # replaced (tests/test_plan_audits.py's cache-draining fixture
         # iterates slots to unpersist, then calls clear()).
-        return iter(list(self._cache))
+        return iter([c for _, c in self._cache])
 
     def __contains__(self, df: DataFrame) -> bool:
-        return any(c.sameSemantics(df) for c in self._cache)
+        app = _app_id(df)
+        return any(a == app and c.sameSemantics(df) for a, c in self._cache)
 
     def clear(self) -> None:
         """Drop every slot WITHOUT unpersisting (callers that want the

@@ -529,7 +529,14 @@ def lsh_bucket_topk_np(corpus: DataFrame, queries: DataFrame, k: int = 5,
     query rows). **`queries` must be deterministic** (ADVICE r16): the
     collected rows drive candidate generation while the exact rerank
     re-evaluates the `queries` lineage — see `brute_force_topk_np` for
-    why the rerank side is NOT rebuilt from the collected rows."""
+    why the rerank side is NOT rebuilt from the collected rows.
+
+    Raises ``ValueError`` unless ``1 <= planes_per_table <= 63``: each
+    table's sign bits pack into one int64 code, on both paths."""
+    if not 1 <= planes_per_table <= 63:
+        raise ValueError(
+            f"planes_per_table={planes_per_table}: must be in [1, 63] "
+            f"(each table's sign bits pack into one int64 code)")
     q_rows = queries.select(id_col, vec_col).limit(
         _MAX_COLLECTED_QUERIES + 1).collect()
     if 0 < len(q_rows) <= _MAX_COLLECTED_QUERIES:
@@ -569,7 +576,6 @@ def _lsh_topk_np_smallq(corpus: DataFrame, q_rows, queries: DataFrame,
     )
 
     pp = planes_per_table
-    assert pp <= 63, "packed per-table code needs planes_per_table <= 63"
     P = np.asarray(hyperplanes(n_tables, planes_per_table),
                    dtype=np.float64).reshape(n_tables * pp, -1)
     pows = 2 ** np.arange(pp - 1, -1, -1)

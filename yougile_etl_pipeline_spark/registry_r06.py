@@ -1,24 +1,12 @@
-"""Round-6 query registrations — STAGED IN ROUND 5, NOT YET WIRED.
+"""Round-6 query registrations.
 
-Do NOT import this module in round 5: the r05 certification window is
-exactly full, and registering past the driver's 50-slot window would
-leave never-certified queries at the round boundary (the accounting
-tests/test_certification_window.py enforces). At ROUND-6 START, wire
-it with one line next to the other registry imports in registry.py
-(BEFORE `_rotate_certification_window()` at the module tail):
-
-    from yougile_etl_pipeline_spark import registry_r06  # noqa
-
-Every oracle below is the exact SQL proven bit-identical against the
-engine in its staged test (file named per entry) at BOTH sf0.001 and
-the driver's certification scale sf0.01 (`scripts/check_staged.py`,
-26/26 green in round 5). The engine sides are the same operator calls
-the tests exercise. Same determinism contract as registry.py's module
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R06_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle. The engine sides are the same operator calls the per-op
+tests exercise. Same determinism contract as registry.py's module
 docstring.
-
-tests/test_registry_r06_staged.py smoke-imports this module in a
-SUBPROCESS (so the round-5 window stays untouched) and verifies every
-entry registers with an oracle and runs green at sf0.001.
 """
 
 from __future__ import annotations
@@ -1941,19 +1929,9 @@ def mart_abc_parts(spark, sf):
                         "l_partkey", "l_extendedprice")
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — the wired-state guard
-# (tests/test_registry_r06_staged.py) asserts each name is registered
-# and inside the driver's 50-slot certification window.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r06 block times
+# every entry).
 R06_ENTRIES: list[str] = [
     "sketch_countmin_suppliers", "events_mad_outliers",
     "dedup_shingle_containment", "dedup_semantic", "text_domain_affinity",

@@ -1,23 +1,10 @@
-"""Round-8 query registrations — WIRED at the r08 rotation.
+"""Round-8 query registrations (none so far).
 
-The staging history (preserved in git): this module was authored in
-round 7 as a deliberately-unimported bank; the r08 rotation wired it
-live via the import at registry_ext.py's bottom, next to the
-registry_r06/registry_r07 imports, and
-tests/test_registry_r08_staged.py now enforces the WIRED state (live
-import, every entry registered with an oracle inside the driver's
-50-slot certification window).
-
-The bank stayed EMPTY through round 8 (no entries were staged).
-Mid-round registrations may land here directly — each one swaps a
-held-out recertification filler back into _STABLE_CERTIFIED
-one-for-one so the window keeps exactly 50 non-stable entries
-(tests/test_certification_window.py enforces the accounting). Same
-staging contract as every bank: an entry lands only with its DuckDB
-oracle proven bit-identical at sf0.001 AND sf0.01
-(scripts/check_staged.py) and a recorded sf0.1 wall time (bench.py's
-`staged` block is manifest-driven off R08_ENTRIES — automatic once
-the entry and its parity test exist).
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R08_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -25,18 +12,8 @@ from __future__ import annotations
 from yougile_etl_pipeline_spark.registry import register  # noqa: F401
 from yougile_etl_pipeline_spark.sources.tables import load_table  # noqa: F401
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
 
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r08_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies. EMPTY at r07 start.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r08 block times
+# every entry).
 R08_ENTRIES: list[str] = []

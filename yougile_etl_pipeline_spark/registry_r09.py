@@ -1,21 +1,10 @@
-"""Round-9 query registrations — WIRED at round-9 start.
+"""Round-9 query registrations.
 
-The staging history (preserved in git): authored in round 8 as a
-deliberately-unimported empty bank; round 9 wired it live via the
-import at registry_ext.py's bottom, next to the
-registry_r06/r07/r08 imports, and tests/test_registry_r09_staged.py
-now enforces the WIRED state (live import, every entry registered
-with an oracle inside the driver's 50-slot certification window).
-
-Every round-9 entry is built and registered in-round (direct
-registration), each swapping one held-out recertification filler
-back into _STABLE_CERTIFIED one-for-one so the window keeps exactly
-50 non-stable entries (tests/test_certification_window.py enforces
-the accounting). Same contract as every bank: an entry lands only
-with its DuckDB oracle proven bit-identical at sf0.001 AND sf0.01
-(per-op parity test + scripts/check_queries.py) and a recorded
-sf0.1 wall time (bench.py's `staged` block is manifest-driven off
-R09_ENTRIES — automatic once the entry and its parity test exist).
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R09_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -506,20 +495,9 @@ def corpus_dedup_rate_report(spark, sf):
                  .cast("bigint").alias("n_dup_rows")))
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r09_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r09 block times
+# every entry).
 R09_ENTRIES: list[str] = [
     "sample_reservoir_per_lang",
     "corpus_mixture_rebalance",

@@ -1,22 +1,10 @@
-"""Round-10 query registrations — WIRED at the r10 rotation.
+"""Round-10 query registrations.
 
-Round-9 state (preserved in git history): this was the staged bank —
-eight entries built and oracle-proven in round 9 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r09 window could not strand a never-certified query. The
-r10 rotation wired it at registry_ext.py's bottom; the eight entries
-now sit inside the driver's 50-slot certification window next to 42
-held-out recertification fillers. Genuinely new round-10 operators
-register directly into this module mid-round, each swapping one
-held-out filler back into _STABLE_CERTIFIED (registry.py) so the
-window stays at exactly 50 non-stable entries
-(tests/test_certification_window.py enforces the accounting; the
-wired-state guards live in tests/test_registry_r10_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r09 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r10 block.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R10_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -414,9 +402,7 @@ def text_vocab_coverage_curve(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 mid-round direct registrations (each swaps one held-out
-# recertification filler back into _STABLE_CERTIFIED — see the r10
-# note in registry.py).
+# Round-10 mid-round direct registrations.
 # ---------------------------------------------------------------------------
 
 _D0_EDGES_SQL = """
@@ -1695,20 +1681,9 @@ def train_shuffle_order_sample(spark, sf):
                     "doc_id", "sk")
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r10_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r10 block times
+# every entry).
 R10_ENTRIES: list[str] = [
     "quality_iqr_outliers",
     "agg_share_of_parent",

@@ -1,25 +1,10 @@
-"""Round-11 query registrations — WIRED at the r11 rotation.
+"""Round-11 query registrations.
 
-Round-10 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 10 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r10 window could not strand a never-certified query. The
-r11 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 38
-held-out recertification fillers and the two planned-change holds
-(stream_click_attribution's new hash-exact oracle,
-graph_pagerank_convergence's shared-prefix rework — VERDICT r10
-#2/#3). Genuinely new round-11 operators register directly into this
-module mid-round, each swapping one held-out filler back into
-_STABLE_CERTIFIED (registry.py) so the window stays at exactly 50
-non-stable entries (tests/test_certification_window.py enforces the
-accounting; the wired-state guards live in
-tests/test_registry_r11_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r10 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r11 block.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R11_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -447,20 +432,6 @@ def sample_temperature_mixture(spark, sf):
                     .alias("n_after")))
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r11_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
 @register("mm_png_stats", """
 WITH p AS (SELECT event_id AS id,
                   5 + event_id % 4 AS w, 3 + event_id % 4 AS h
@@ -1681,9 +1652,9 @@ def sim_ivf_recall_eval(spark, sf):
          / F.count(F.lit(1)).cast("double")).alias("recall_at_5"))
 
 
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r11_staged.py and consumed by bench.py's
-# r11 block so every entry carries a wall time + plan fingerprint.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r11 block times
+# every entry).
 R11_ENTRIES: list[str] = [
     "mm_bmp_flip_crop",
     "graph_harmonic_r2",

@@ -1,25 +1,10 @@
-"""Round-12 query registrations — WIRED at the r12 rotation.
+"""Round-12 query registrations.
 
-Round-11 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 11 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r11 window could not strand a never-certified query. The
-r12 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 37
-held-out r05-era recertification fillers and the three planned-change
-holds (sql_pivot_multi_agg's post-pivot coalesce, the single-batch
-drain hardening of stream_burst_flags / stream_cumulative_users —
-ADVICE r11). Genuinely new round-12 operators register directly into
-this module mid-round, each swapping one held-out filler back into
-_STABLE_CERTIFIED (registry.py) so the window stays at exactly 50
-non-stable entries (tests/test_certification_window.py enforces the
-accounting; the wired-state guards live in
-tests/test_registry_r12_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r11 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r12 block.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R12_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -1213,21 +1198,9 @@ def quality_benford_chi2_gate(spark, sf):
         "n", "chi2", (F.col("chi2") > 15.507).alias("reject_benford"))
 
 
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r12_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r12 block times
+# every entry).
 R12_ENTRIES: list[str] = [
     "dedup_lsh_bucket_profile",
     "dedup_lsh_band_hist",

@@ -1,26 +1,10 @@
-"""Round-13 query registrations — WIRED at the r13 rotation.
+"""Round-13 query registrations.
 
-Round-12 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 12 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r12 window could not strand a never-certified query. The
-r13 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 37
-held-out recertification fillers (the 16 entries still on their
-r05-era proof plus the 21 oldest r06-vintage stables) and the three
-ADVICE-r12 planned-change holds (quality_benford_chi2_gate's 9-cell
-domain join, mm_media_dispatch_profile's BIGINT partial sums,
-dedup_minhash_estimate_error's validated signature reuse). Genuinely
-new round-13 operators register directly into this module mid-round,
-each swapping one held-out filler back into _STABLE_CERTIFIED
-(registry.py) so the window stays at exactly 50 non-stable entries
-(tests/test_certification_window.py enforces the accounting; the
-wired-state guards live in tests/test_registry_r13_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r12 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r13 block.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R13_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -1107,22 +1091,9 @@ def mm_png_palette_stats(spark, sf):
     return png_stats(synth_png_pal8_payloads(ev, "event_id"))
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Accumulated through round 12 (the staged bank), grows with every
-# mid-round r13 registration; every name must be oracle-proven at
-# BOTH certification scales before it lands here (the r06–r12 staging
-# discipline). Pinned by tests/test_registry_r13_staged.py and
-# consumed by bench.py's `r13` block so every entry carries a
-# wall time + plan fingerprint.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r13 block times
+# every entry).
 R13_ENTRIES: list[str] = [
     "stream_error_rate_daily",
     "events_error_burst_runs",

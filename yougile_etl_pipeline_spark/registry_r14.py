@@ -1,19 +1,10 @@
-"""Round-14 query registrations — WIRED at r14 start.
+"""Round-14 query registrations.
 
-Staged and oracle-proven during round 13 (every entry's DuckDB oracle
-bit-identical at sf0.001 AND sf0.01 via scripts/check_staged.py, with
-a recorded sf0.1 wall in BENCH_r13's `staged` block); went live at the
-r14 rotation via the one-line import at the bottom of registry_ext.py
-next to the registry_r06–r13 imports. The fourteen bank entries sit
-inside the r14 certification window next to 36 held-out
-recertification fillers picked by last-driver-green age (VERDICT r13
-#1). Further round-14 operators register directly into this module
-mid-round, each swapping a held-out filler back into
-_STABLE_CERTIFIED one-for-one.
-
-tests/test_registry_r14_staged.py now enforces the WIRED invariants
-(import live, every entry inside ``list(QUERIES)[:50]``, oracle
-present, oracle-executed from the REGISTRY copy at SF_SMOKE).
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R14_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 
 BEFORE designing any new entry, grep the registry for the name AND
 the feature — @register silently overwrites an existing name in
@@ -874,21 +865,9 @@ def text_dup_span_removal_capped(spark, sf):
                             n=_DSRC_N, max_gram_df=_DSRC_CAP)
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Accumulates through round 13; every name must be oracle-proven at
-# BOTH certification scales before it lands here (the r06–r13 staging
-# discipline). Pinned by tests/test_registry_r14_staged.py and
-# consumed by bench.py's `staged` block so every bank entry carries a
-# wall time + plan fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r14 block times
+# every entry).
 R14_ENTRIES: list[str] = [
     "mm_png_gray_resize_nearest",
     "mm_png_rgba_flip_crop",
@@ -904,8 +883,6 @@ R14_ENTRIES: list[str] = [
     "mm_wav_stereo_stats",
     "quality_runs_test_gate",
     "sim_ivf_cluster_balance",
-    # mid-round r14 registrations (each swaps one held-out recert
-    # filler back into _STABLE_CERTIFIED, youngest-vintage first, so
-    # the oldest official rows stay in the window — VERDICT r13 #1):
-    "text_dup_span_removal_capped",  # swap-back: layout_zorder_profile
+    # mid-round r14 registration:
+    "text_dup_span_removal_capped",
 ]

@@ -1,19 +1,10 @@
-"""Round-15 query registrations — WIRED at r15 start.
+"""Round-15 query registrations.
 
-Staged and oracle-proven during round 14 (every entry's DuckDB oracle
-bit-identical at sf0.001 AND sf0.01 via scripts/check_staged.py, with
-a recorded sf0.1 wall in BENCH_r14's `staged` block); went live at the
-r15 rotation via the one-line import at the bottom of registry_ext.py
-next to the registry_r06–r14 imports. The sixteen bank entries sit
-inside the r15 certification window next to 5 planned-change
-gram-cache holds (ADVICE r14 #1) and 29 held-out recertification
-fillers picked by last-driver-green age. Further round-15 operators
-register directly into this module mid-round, each swapping a
-held-out filler back into _STABLE_CERTIFIED one-for-one.
-
-tests/test_registry_r15_staged.py now enforces the WIRED invariants
-(import live, every entry inside ``list(QUERIES)[:50]``, oracle
-present, oracle-executed from the REGISTRY copy at SF_SMOKE).
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R15_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 
 BEFORE designing any new entry, grep the registry for the name AND
 the feature — @register silently overwrites an existing name in
@@ -994,8 +985,6 @@ def sim_lsh_recall_sweep(spark, sf):
 # bucketing and reintroduce the duplicate-lineage recomputation).
 # Repeated builds (bench warm/time, check scripts) now HIT the cache
 # instead of stacking persisted copies; misses evict oldest-first.
-# This change is the reason sim_lsh_recall_sweep is HELD IN the r16
-# certification window (changed implementations recertify officially).
 from yougile_etl_pipeline_spark.operators.caching import (  # noqa: E402
     PlanKeyedLRU,
 )
@@ -1129,11 +1118,9 @@ def text_dup_span_shrinkage(spark, sf):
                "AS BIGINT)").alias("removed_ppm"))
 
 
-# Staged-entry manifest, in registration order (kept in sync by the
-# bank's subprocess smoke: every name registered by importing this
-# module must appear here, and vice versa). Also consumed by
-# bench.py's `staged` block so every bank entry carries a wall time +
-# plan fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r15 block times
+# every entry).
 R15_ENTRIES: list[str] = [
     "text_simpson_diversity",
     "train_token_budget_select",
@@ -1152,15 +1139,3 @@ R15_ENTRIES: list[str] = [
     "stream_gap_burstiness",  # in bench._STREAMING_SKIP since staging
     "text_dup_span_shrinkage",
 ]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16 by ADVICE r15 #1): re-rotating converges any import
-# order to the same certification-window SET; in the canonical order
-# (wired via registry_ext's bottom, mid registry import) the attribute
-# does not exist yet and registry's own tail call performs the single
-# rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

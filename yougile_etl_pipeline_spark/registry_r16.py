@@ -1,22 +1,12 @@
-"""Round-16 query registrations — WIRED at r16 start.
+"""Round-16 query registrations.
 
-Round-15 state (preserved in git history): this was a staged
-eighteen-entry bank, deliberately unimported so the exactly-full r15
-certification window stayed untouched. The r16 rotation wired it at
-registry_ext.py's bottom next to the r06–r15 imports; its entries now
-sit inside ``list(QUERIES)[:50]`` (18 bank + 1 sim_lsh_recall_sweep
-hold + 31 age-picked recertification fillers = 50). Genuinely new
-round-16 operators register directly into this module mid-round, each
-swapping a held-out recertification filler back into
-_STABLE_CERTIFIED so the driver's 50-slot window never strands a
-never-certified query.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R16_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 
-Same staging discipline as the previous banks: every entry landed
-here only with its DuckDB oracle proven bit-identical at sf0.001 AND
-sf0.01 (scripts/check_staged.py) and a recorded sf0.1 wall time
-(bench.py's r16 block is manifest-driven off R16_ENTRIES).
-
-NO media entries in this bank (VERDICT r14 #7: the media completion
+NO media entries in this module (VERDICT r14 #7: the media completion
 boundary declared in COVERAGE.md §E4 holds; the new-entry budget goes
 to LLM-pipeline depth).
 
@@ -1246,11 +1236,9 @@ def _r16_persist(df):
     return _R16_CACHE.persist(df)
 
 
-# Staged-entry manifest, in registration order (kept in sync by the
-# bank's subprocess smoke: every name registered by importing this
-# module must appear here, and vice versa). Also consumed by
-# bench.py's `staged` block so every bank entry carries a wall time +
-# plan fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r16 block times
+# every entry).
 R16_ENTRIES: list[str] = [
     "text_mean_docfreq_gate",
     "text_skipgram_cooccurrence",
@@ -1271,20 +1259,3 @@ R16_ENTRIES: list[str] = [
     "events_session_gap_sweep",
     "corpus_survivor_token_share",
 ]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16 by ADVICE r15 #1 — the comments that referenced it used
-# to describe a mechanism only r14 had): if this module is imported
-# in-process AFTER registry.py's end-of-module rotation already ran
-# (a test importing the module directly, bench importing a bank), the
-# registrations above appended past the rotated stable block;
-# re-rotating converges any import order to the same
-# certification-window SET (rotation is idempotent: it just re-moves
-# the stable list to the tail). In the canonical order (wired via
-# registry_ext's bottom, mid registry import) the attribute does not
-# exist yet and registry's own tail call performs the single rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

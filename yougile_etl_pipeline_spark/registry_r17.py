@@ -1,29 +1,16 @@
-"""Round-17 query registrations — STAGING BANK, NOT YET WIRED.
+"""Round-17 query registrations.
 
-Do NOT import this module in round 16: the r16 certification window is
-exactly full (the eighteen registry_r16 bank entries plus the
-sim_lsh_recall_sweep planned-change hold plus the 31 held-out
-recertification fillers picked by last-driver-green age, with
-mid-round registrations swapping fillers back one-for-one), and
-registering past the driver's 50-slot window would leave
-never-certified queries at the round boundary
-(tests/test_certification_window.py enforces the accounting). At
-ROUND-17 START, wire it with one line at the bottom of
-registry_ext.py next to the registry_r06–r16 imports.
+Imported at the bottom of registry_ext.py with the other
+registry_rNN modules (the circular-import note there explains why);
+R17_ENTRIES below lists the module's registrations, and
+tests/test_oracle_parity.py checks every one against its DuckDB
+oracle.
 
-Same staging contract as the previous banks: every entry lands here
-only with its DuckDB oracle proven bit-identical at sf0.001 AND
-sf0.01 (scripts/check_staged.py) and a recorded sf0.1 wall time
-(bench.py's `staged` block is manifest-driven off R17_ENTRIES —
-automatic once the entry and its parity test exist). Every >0.5 s
-entry additionally needs an sf1 slope row in SCALE.md's r17-gate
-table BEFORE it lands (the standing VERDICT-r14 #4 staging gate).
-
-NO media entries in this bank (the media completion boundary declared
-in COVERAGE.md §E4 holds; the new-entry budget goes to LLM-pipeline
-depth). Per VERDICT r15 #4 the bank LEADS with the end-to-end
-training-mix capstone (`train_corpus_build`) that chains the
-certified pieces in ONE lineage: near-dup canonicalization
+NO media entries in this module (the media completion boundary
+declared in COVERAGE.md §E4 holds; the new-entry budget goes to
+LLM-pipeline depth). Per VERDICT r15 #4 the module LEADS with the
+end-to-end training-mix capstone (`train_corpus_build`) that chains
+the certified pieces in ONE lineage: near-dup canonicalization
 (dedup_quality_canonical's survivor policy) → benchmark
 decontamination (minhash_decontam, benchmark-as-set) → quality gates
 (quality_rule_attribution's rule set) → largest-remainder
@@ -31,13 +18,6 @@ apportionment (train_token_apportionment's algorithm over a real
 token budget) → greedy packed selection with per (lang, source)
 token accounting — the LLM-pipeline analogue of `mart_flagship`,
 oracle-paired end to end.
-
-tests/test_registry_r17_staged.py smoke-imports this module in a
-SUBPROCESS (so the round-16 window stays untouched) and verifies every
-entry registers with an oracle and runs green at sf0.001. Tests that
-need an r17 entry in-process must snapshot/restore QUERIES/ORACLES or
-run in a subprocess (ADVICE r15 #2 — an in-process import permanently
-appends to the global registry for the rest of the pytest session).
 
 BEFORE designing any new entry, grep the registry for the name AND
 the feature — @register silently overwrites an existing name in
@@ -1221,11 +1201,9 @@ def train_quota_sensitivity(spark, sf):
                      .cast("bigint").alias("quota_fill_ppm")))
 
 
-# Staged-entry manifest, in registration order (kept in sync by the
-# bank's subprocess smoke: every name registered by importing this
-# module must appear here, and vice versa). Also consumed by
-# bench.py's `staged` block so every bank entry carries a wall time +
-# plan fingerprint before it ever certifies.
+# Manifest of this module's registrations (tests/test_oracle_parity.py
+# keeps it in step with the registry; bench.py's r17 block times
+# every entry).
 R17_ENTRIES: list[str] = [
     "train_corpus_build",
     "train_build_funnel",
@@ -1242,12 +1220,3 @@ R17_ENTRIES: list[str] = [
     "emb_label_centroid_purity",
     "train_quota_sensitivity",
 ]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16/r17 by ADVICE r15 #1): re-rotating converges any import
-# order to the same certification-window SET; rotation is idempotent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
